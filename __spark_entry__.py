@@ -43,16 +43,23 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _idx_cache_key(sf_dir: str, table: str, n: int = 12) -> str:
+def _idx_cache_key(sf_dir: str, table: str, *builders: Callable, n: int = 12) -> str:
     """Cache key for gate-built derived indexes = path + a stat fingerprint
-    of the source parquet (name, size, mtime of every part file), so
-    regenerated test data at the same path gets a fresh index instead of a
+    of the source parquet (name, size, mtime of every part file) + the
+    source of each builder's module, so regenerated test data at the same
+    path, or a changed builder, gets a fresh index instead of a
     silently-stale one, and two processes over different data never share a
-    directory (round-5 ADVICE, applied to every gate index cache)."""
+    directory (round-5 ADVICE, applied to every gate index cache; the
+    pipeline's checkpoints key on runner.CODE_FINGERPRINT the same way)."""
     import hashlib
+    import inspect
+    import sys
 
     src = os.path.join(sf_dir, f"{table}.parquet")
     h = hashlib.md5(os.path.abspath(sf_dir).encode())
+    for b in builders:
+        h.update(f"{b.__module__}.{b.__qualname__}".encode())
+        h.update(inspect.getsource(sys.modules[b.__module__]).encode())
     parts = [src]
     if os.path.isdir(src):
         parts = [
@@ -64,6 +71,24 @@ def _idx_cache_key(sf_dir: str, table: str, n: int = 12) -> str:
         st = os.stat(pth)
         h.update(f"{os.path.basename(pth)}:{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:n]
+
+
+def _published_index(name: str, key: str, build: Callable[[str], object]) -> str:
+    """The gate index directory for ``key``. The first caller runs
+    ``build(dir)`` into a fresh temp dir and publishes it with one atomic
+    rename, so a crashed or concurrent builder never leaves a half-written
+    index at the path; the loser of a same-key race drops its copy."""
+    import shutil
+
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_idx_{key}")
+    if not os.path.isdir(root):
+        tmp = tempfile.mkdtemp(prefix=f"spark_graft_{name}_build_")
+        build(tmp)
+        try:
+            os.rename(tmp, root)
+        except OSError:  # a concurrent builder published identical content
+            shutil.rmtree(tmp, ignore_errors=True)
+    return root
 
 
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,13 +577,12 @@ def q_bm25_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 scoring against the PERSISTED index — build is a separate
     stage (the reference loads a prebuilt bm25s index, kb_utils.py:895-918),
     so the gate measures query cost, not corpus indexing."""
-    key = _idx_cache_key(sf_dir, "documents")
-    idx_path = os.path.join(tempfile.gettempdir(), f"spark_graft_bm25_idx_{key}")
-    if os.path.exists(os.path.join(idx_path, "_bm25_stats.json")):
-        tp, n_docs, avgdl = retrieval.load_bm25_index(spark, idx_path)
-    else:
-        docs = _t(spark, sf_dir, "documents")
-        tp, n_docs, avgdl = retrieval.build_bm25_index(docs, idx_path)
+    idx_path = _published_index(
+        "bm25",
+        _idx_cache_key(sf_dir, "documents", retrieval.build_bm25_index),
+        lambda d: retrieval.build_bm25_index(_t(spark, sf_dir, "documents"), d),
+    )
+    tp, n_docs, avgdl = retrieval.load_bm25_index(spark, idx_path)
     # top_k=None: the oracle scores every matching doc, and a LIMIT at a
     # score tie is nondeterministic across engines (first seen at sf1,
     # where 48k docs match vs the 10k default cap)
@@ -908,13 +932,12 @@ def q_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]]
-    key = _idx_cache_key(sf_dir, "embeddings")
-    idx_path = os.path.join(tempfile.gettempdir(), f"spark_graft_ann_idx_{key}")
-    marker = os.path.join(idx_path, "_SUCCESS")
-    if not os.path.exists(marker):
-        idx = similarity.build_ann_index(emb, idx_path)
-    else:
-        idx = spark.read.parquet(idx_path)
+    idx_path = _published_index(
+        "ann",
+        _idx_cache_key(sf_dir, "embeddings", similarity.build_ann_index),
+        lambda d: similarity.build_ann_index(emb, d),
+    )
+    idx = spark.read.parquet(idx_path)
     return similarity.ann_bucketed_top_k(idx, qvec, top_k=10)
 
 
@@ -932,24 +955,19 @@ def q_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 2).first()["embedding"]]
-    # stat-fingerprinted cache key (round-5 ADVICE; see _idx_cache_key).
-    # Same-data races are settled by the atomic rename below.
-    idx_root = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivf_idx_{_idx_cache_key(sf_dir, 'embeddings')}",
-    )
-    cent_path = os.path.join(idx_root, "_centroids.json")
-    if not os.path.exists(cent_path):
-        build_root = tempfile.mkdtemp(prefix="spark_graft_ivf_build_")
+
+    def build(root: str) -> None:
         centroids = similarity.ivf_train(emb, n_centroids=8, n_iter=4)
-        similarity.ivf_build(emb, os.path.join(build_root, "ivf"), centroids)
-        with open(os.path.join(build_root, "_centroids.json"), "w") as f:
+        similarity.ivf_build(emb, os.path.join(root, "ivf"), centroids)
+        with open(os.path.join(root, "_centroids.json"), "w") as f:
             json.dump(centroids, f)
-        try:
-            os.rename(build_root, idx_root)  # atomic publish; loser keeps dir
-        except OSError:
-            pass  # a concurrent builder already published identical content
-    with open(cent_path) as f:
+
+    idx_root = _published_index(
+        "ivf",
+        _idx_cache_key(sf_dir, "embeddings", similarity.ivf_train, similarity.ivf_build),
+        build,
+    )
+    with open(os.path.join(idx_root, "_centroids.json")) as f:
         centroids = json.load(f)
     idx = spark.read.parquet(os.path.join(idx_root, "ivf"))
     return similarity.ivf_top_k(

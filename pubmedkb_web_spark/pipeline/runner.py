@@ -154,8 +154,11 @@ class CheckpointedPipeline:
         session_confs: dict[str, str] | None = None,
     ) -> DataFrame:
         """``session_confs``: SQL confs set for THIS stage's execution and
-        restored afterwards. Stages run serially on the driver, so this is
-        race-free, and it is how heterogeneous stages coexist in one
+        restored afterwards. They are session-wide, so they are race-free
+        only while no other stage runs: the tail stages of
+        ``run_kg_pipeline`` run concurrently on a thread pool, and the one
+        stage that sets confs (``mentions``) finishes before that pool
+        starts. This is how heterogeneous stages coexist in one
         session: the mentions window sort degrades superlinearly once
         post-shuffle partitions grow past a few MB (3.2M docs, 8 cores:
         391 s at 64 MB-ish partitions vs 110 s at 4 MB), while the

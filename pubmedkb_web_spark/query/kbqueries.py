@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from ..functions.frames import local_frame
+
 
 # ---------------------------------------------------------------- V2G (J8)
 
@@ -51,8 +53,8 @@ def cross_product_lookup(main: DataFrame, c_keys: list[str], d_keys: list[str]) 
     """c_set × d_set probe (J12, server.py:2892-2896): crossJoin of two
     literal frames, then join the main (c, d)-keyed relation."""
     spark = main.sparkSession
-    cs = spark.createDataFrame([(c,) for c in c_keys], "c string")
-    ds = spark.createDataFrame([(d,) for d in d_keys], "d string")
+    cs = local_frame(spark, [(c,) for c in c_keys], "c string")
+    ds = local_frame(spark, [(d,) for d in d_keys], "d string")
     return F.broadcast(cs.crossJoin(ds)).join(main, ["c", "d"], "inner")
 
 

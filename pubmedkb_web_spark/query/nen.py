@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from ..functions.frames import local_frame
 from ..schemas import VARIANT_TYPES as VARIANT_UMBRELLA
 
 DEFAULT_MIN_SIMILARITY = 0.85
@@ -135,8 +136,8 @@ def variant_in_kb(
         for ii, i in enumerate(id_list)
         for ni, n in enumerate(name_list)
     ]
-    probe_df = spark.createDataFrame(
-        probes, "type string, t_ord int, id string, i_ord int, name string, n_ord int"
+    probe_df = local_frame(
+        spark, probes, "type string, t_ord int, id string, i_ord int, name string, n_ord int"
     )
     freq = entity_dict.groupBy("type", "id", "name").agg(F.sum("freq").alias("frequency"))
     hits = freq.join(F.broadcast(probe_df), ["type", "id", "name"], "inner")

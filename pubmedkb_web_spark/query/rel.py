@@ -2,24 +2,31 @@
 /root/reference/server.py:770-958).
 
 Stages: evaluate spec → relevance/citation/year/impact sort → offset-limit
-pagination → hydration joins (page only) → statistics. The summary stage
+pagination → hydration (page only) → statistics. The summary stage
 (summary.py) runs on the collected page — it inspects ≤ one page of rows,
 exactly like the reference.
 
-Plan shape matters: the orderBy+limit happens *before* the hydration joins
-(lazy hydration, server.py:875-887) so Catalyst plans TakeOrderedAndProject
-on the thin hit relation and the wide sentence/annotation joins only touch
-the page's documents (broadcast of the paginated doc set).
+Plan shape: a request is a handful of Spark jobs. The hits come from ONE
+postings scan, cached hash-partitioned by doc_id, so the per-paper scores
+aggregate without another shuffle and the orderBy+limit
+(TakeOrderedAndProject) runs on that thin relation *before* hydration
+(lazy hydration, server.py:875-887). Hydration pushes the page's literal
+doc_ids into its scans; statistics sum per-doc aggregates. The page and its
+relations are Arrow-built JVM-local frames: collecting them runs no job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
 
+from ..functions.frames import collect_local, local_frame
+from ..schemas import ANNOTATOR_NAMES
 from . import spec as spec_mod
 
 SORT_KEYS = ("relevance", "citation", "year", "journal_impact")
@@ -92,7 +99,7 @@ def ranked_slice(df: DataFrame, order: list, page_start: int, page_end: int) -> 
         # small broadcast join, NOT a literal create_map: a 10k-partition
         # relation would otherwise embed 10k map entries into every task's
         # plan (round-2 ADVICE)
-        off_df = spark.createDataFrame(offsets, "_pid int, _off long")
+        off_df = local_frame(spark, offsets, "_pid int, _off long")
         w = W.partitionBy("_pid").orderBy(*order)
         ranked = (
             ranged.withColumn("_rn", F.row_number().over(w))
@@ -105,8 +112,7 @@ def ranked_slice(df: DataFrame, order: list, page_start: int, page_end: int) -> 
         # cache is hot, then release the cached partitions — repeated
         # deep-page queries in a long session must not accumulate storage
         # (round-2 ADVICE leak)
-        rows = page.collect()
-        return spark.createDataFrame(rows, page.schema)
+        return collect_local(page)
     finally:
         ranged.unpersist()
 
@@ -151,69 +157,66 @@ def hydrate(
     sentences: DataFrame,
 ) -> DataFrame:
     """Fetch full annotation + sentence records for the page only
-    (server.py:665-745). The page is ≤ a page of doc_ids → broadcast; CRE
-    rows re-sorted by parsed percent confidence happens at render
-    (server.py:729-741) via the parsed ``confidence_value`` column."""
-    page_hits = hits.join(F.broadcast(page.select("doc_id", "rank")), "doc_id")
-    ann = annotations.join(
-        F.broadcast(page_hits.select("doc_id", "ann_id", "rank")),
-        ["doc_id", "ann_id"],
-    )
-    out = ann.join(
-        sentences.select("doc_id", "sent_idx", "sentence"),
-        ["doc_id", "sent_idx"],
-        "left",
-    )
+    (server.py:665-745), as a JVM-local frame.
+
+    ONE job: the page's literal doc_id list is pushed into the hits,
+    annotations and sentences scans, which run as one union; the
+    (doc_id, ann_id) and (doc_id, sent_idx) lookups then join ≤ a page of
+    documents' rows on the driver. CRE rows re-sorted by parsed percent
+    confidence happens at render (server.py:729-741) via the parsed
+    ``confidence_value`` column."""
+    rank = {r["doc_id"]: r["rank"] for r in page.select("doc_id", "rank").collect()}
     # "93.2%" → 93.2 (server.py:733 float(score[:-1]))
-    return out.withColumn(
+    ann = annotations.withColumn(
         "confidence_value",
         (F.regexp_extract(F.col("confidence"), r"^([\d.]+)%$", 1)).try_cast("double"),
     )
+    on_page = F.col("doc_id").isin(sorted(rank))
+    parts = [hits.select("doc_id", "ann_id"), ann, sentences.select("doc_id", "sent_idx", "sentence")]
+    rows = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [p.filter(on_page).withColumn("_part", F.lit(i)) for i, p in enumerate(parts)],
+    ).collect()
+    keys = {(r["doc_id"], r["ann_id"]) for r in rows if r["_part"] == 0}
+    sentence = {(r["doc_id"], r["sent_idx"]): r["sentence"] for r in rows if r["_part"] == 2}
+    cols = ["doc_id", "sent_idx", "ann_id"]
+    cols += [c for c in annotations.columns if c not in cols]
+    schema = T.StructType(
+        [ann.schema[c] for c in cols]
+        + [page.schema["rank"], T.StructField("sentence", T.StringType()), ann.schema["confidence_value"]]
+    )
+    out = [
+        (*[r[c] for c in cols], rank[r["doc_id"]], sentence.get((r["doc_id"], r["sent_idx"])), r["confidence_value"])
+        for r in rows
+        if r["_part"] == 1 and (r["doc_id"], r["ann_id"]) in keys
+    ]
+    return local_frame(page.sparkSession, out, schema)
 
 
 def statistics(hits: DataFrame, annotations: DataFrame) -> dict:
     """Result statistics (server.py:895-921): papers / sentences /
     relations, plus per-annotator relation counts.
 
-    ONE job over the joined relation (round-3 VERDICT #7 — the previous
-    version ran the overall and per-annotator aggregations as two separate
-    jobs over the same join): GROUPING SETS ((), (annotator)) computes the
-    grand-total row and the per-annotator rows in a single shuffle; the
-    distinct paper/sentence counts only live on the grand-total row."""
+    Distinct counts without a distinct-aggregate shuffle: the per-doc
+    figures (its sentence set's size, its relation count per annotator the
+    pipeline writes, ``ANNOTATOR_NAMES``) are one aggregate over the matched
+    annotations, and the totals are their sums — a sentence belongs to one
+    paper."""
     ann = annotations.join(hits.select("doc_id", "ann_id"), ["doc_id", "ann_id"])
-    rows = (
-        ann.groupingSets(
-            [[], [F.col("annotator")]],
-            F.col("annotator"),
-        )
-        .agg(
-            F.countDistinct("doc_id").alias("papers"),
-            F.countDistinct("doc_id", "sent_idx").alias("sentences"),
-            F.count(F.lit(1)).alias("relations"),
-            F.grouping("annotator").alias("is_total"),
-        )
-        .collect()
+    per_doc = ann.groupBy("doc_id").agg(
+        F.size(F.collect_set("sent_idx")).alias("sentences"),
+        F.count(F.lit(1)).alias("relations"),
+        *[F.count_if(F.col("annotator") == a).alias(a) for a in ANNOTATOR_NAMES],
     )
-    # Spark 4's groupingSets returns ZERO rows on empty input (a plain
-    # global agg would return one zeros row), so a no-match query must fall
-    # back to the reference's zero counts (server.py:895-921) instead of
-    # crashing on a missing grand-total row.
-    overall = next((r for r in rows if r["is_total"] == 1), None)
-    if overall is None:
-        return {
-            "papers": 0,
-            "sentences": 0,
-            "relations": 0,
-            "relations_by_annotator": {},
-        }
-    per_annotator = {
-        r["annotator"]: r["relations"] for r in rows if r["is_total"] == 0
-    }
+    row = per_doc.agg(
+        F.count(F.lit(1)).alias("papers"),
+        *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in ("sentences", "relations", *ANNOTATOR_NAMES)],
+    ).first()
     return {
-        "papers": overall["papers"],
-        "sentences": overall["sentences"],
-        "relations": overall["relations"],
-        "relations_by_annotator": per_annotator,
+        "papers": row["papers"],
+        "sentences": row["sentences"],
+        "relations": row["relations"],
+        "relations_by_annotator": {a: row[a] for a in ANNOTATOR_NAMES if row[a]},
     }
 
 
@@ -235,22 +238,17 @@ def run_rel(
         hits = spec_mod.evaluate_single(postings, e1_spec, pmid)
     else:
         hits = spec_mod.evaluate_pair(postings, e1_spec, e2_spec, pmid)
-    hits = hits.cache()  # reused by scores, hydration and statistics
+    # reused by scores, hydration and statistics; released in the finally:
+    # a long-lived session issuing many rel queries must not accumulate
+    # cached posting relations (same leak ranked_slice fixed in round 3)
+    hits = hits.cache()
     try:
-        spark = hits.sparkSession
-        scores = paper_scores(hits)
-        page = sorted_page(scores, meta, sort_key, page_start, page_end)
+        # the page and its relations are ≤ a page of rows: kept as
+        # JVM-local frames, which later collects answer without a job.
+        # The reference renders every page it returns (server.py:665-745),
+        # so the eager collects are the honest cost model, not added ones.
+        page = collect_local(sorted_page(paper_scores(hits), meta, sort_key, page_start, page_end))
         relations = hydrate(page, hits, annotations, sentences)
-        # Materialize the (≤ page-sized) results while the cache is hot,
-        # then release it in the finally: a long-lived session issuing many
-        # rel queries must not accumulate cached posting relations (same
-        # leak ranked_slice fixed in round 3). The reference renders every
-        # page it returns (server.py:665-745), so the eager page collect is
-        # the honest cost model, not an added one.
-        page_rows = page.collect()
-        rel_rows = relations.collect()
-        papers_df = spark.createDataFrame(page_rows, page.schema)
-        relations_df = spark.createDataFrame(rel_rows, relations.schema)
         stats = statistics(hits, annotations) if with_statistics else {}
     finally:
         hits.unpersist()
@@ -261,11 +259,9 @@ def run_rel(
         from . import summary as summary_mod
 
         summary = summary_mod.summarize_page(
-            [r.asDict() for r in rel_rows],
+            [r.asDict() for r in relations.collect()],
             e1_spec=e1_spec,
             e2_spec=e2_spec,
             pmid=pmid,
         )
-    return RelResult(
-        papers=papers_df, relations=relations_df, statistics=stats, summary=summary
-    )
+    return RelResult(papers=page, relations=relations, statistics=stats, summary=summary)

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..functions.frames import local_frame
+
 RRF_K = 61  # reciprocal-rank constant (kb_utils.py:997)
 BM25_K1 = 1.5
 BM25_B = 0.75
@@ -231,7 +233,7 @@ def fetch_paper_text(paper_text: DataFrame, doc_ids: DataFrame | list[str]) -> D
     rebuilt driver-light from the id list itself."""
     spark = paper_text.sparkSession
     if isinstance(doc_ids, list):
-        ids = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+        ids = local_frame(spark, [(d,) for d in doc_ids], "doc_id string")
     else:
         ids = doc_ids.select("doc_id")
     found = paper_text.select("doc_id", "title", "abstract").join(

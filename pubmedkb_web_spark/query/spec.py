@@ -6,28 +6,32 @@ set intersection (kb_utils.py:167-195), OR = key-wise union
 (kb_utils.py:198-216), two-entity = head/tail cross pairing
 (kb_utils.py:1651-1668), with per-query memoization and pmid pushdown.
 
-Here a spec compiles to a DataFrame DAG over ``entity_postings``:
+Here a spec tree of any shape reads ``entity_postings`` ONCE:
 
-- leaf  → filter (idx_kind, type, key) [+ pmid] — Catalyst pushes it to the
-          parquet scan of the postings table
-- AND   → inner join on (role, doc_id, ann_id): the reference intersects
-          pmid keysets AND annotation value-sets, which together are exactly
-          row-level intersection
-- OR    → unionByName + dropDuplicates
-- VARIANT umbrella → isin over the six concrete types (kb_utils.py:58-67)
-- memoization → identical leaves return the *same* DataFrame object, so
-          Catalyst reuses the subplan/exchange (kb_utils.py:1556-1562 analog)
+- scan  → one filter ORing every distinct leaf (idx_kind, type, key)
+          [+ pmid]; Catalyst pushes it into the parquet scan
+- leaf  → one boolean flag column per distinct leaf; identical leaves share
+          a column (the kb_utils.py:1556-1562 memoization analog); VARIANT
+          umbrella → isin over the six concrete types (kb_utils.py:58-67)
+- one ``repartition(doc_id)``, then ``max(flag)`` per (role, doc_id,
+          ann_id) — or per (doc_id, ann_id) with each flag masked by role,
+          for single and pair queries
+- AND/OR → ``&``/``|`` over the aggregated flags: the reference intersects
+          pmid keysets AND annotation value-sets, which together are
+          exactly row-level intersection
 
-The reference's "smallest input first" and "abort empty AND"
-(kb_utils.py:171-173,1572-1573) are left to Catalyst/AQE: join reordering +
-empty-relation propagation at runtime.
+Evaluation plans exactly one Exchange, and a later doc-keyed aggregate over
+the hits (the paper scores) reuses its doc_id partitioning. The
+reference's "smallest input first" and "abort empty AND"
+(kb_utils.py:171-173,1572-1573) have nothing left to do: there is no join.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+import operator
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import VARIANT_TYPES
@@ -35,63 +39,70 @@ from ..schemas import VARIANT_TYPES
 Spec = tuple  # ("AND"|"OR", (spec, ...)) | ("type_id"|"type_name", (type, key))
 
 _HT_COLS = ["role", "doc_id", "ann_id", "score"]
+_ROLES = ("head", "tail")
 
 
 class SpecCompiler:
     def __init__(self, postings: DataFrame, pmid: str | None = None):
         self.postings = postings
         self.pmid = pmid
-        self._memo: dict[tuple, DataFrame] = {}
+        self._leaves: dict[tuple, str] = {}  # (idx_kind, type, key) → flag column
 
-    # -- leaf -----------------------------------------------------------
-    def _leaf(self, idx_kind: str, etype: str, key: str) -> DataFrame:
-        memo_key = (idx_kind, etype, key, self.pmid)
-        if memo_key in self._memo:
-            return self._memo[memo_key]
-        p = self.postings
-        cond = (F.col("idx_kind") == idx_kind) & (F.col("key") == key)
-        if etype == "VARIANT":  # umbrella expansion
-            cond = cond & F.col("type").isin(VARIANT_TYPES)
-        else:
-            cond = cond & (F.col("type") == etype)
-        if self.pmid is not None:  # pmid pushdown below all joins (P2)
-            cond = cond & (F.col("doc_id") == self.pmid)
-        # umbrella expansion can match the same ann under several types →
-        # dedupe to pure (role, doc, ann) posting rows
-        df = p.filter(cond).select(*_HT_COLS).dropDuplicates(["role", "doc_id", "ann_id"])
-        self._memo[memo_key] = df
-        return df
-
-    # -- tree -----------------------------------------------------------
-    def compile(self, spec: Spec) -> DataFrame:
-        op = spec[0]
+    def condition(self, spec: Spec, role: str | None = None) -> Column:
+        """The spec's AND/OR tree over the aggregated leaf flags of ``role``
+        (None: the unmasked flags of a (role, doc_id, ann_id) group)."""
+        op, args = spec
         if op in ("type_id", "type_name"):
-            etype, key = spec[1]
-            return self._leaf(op, etype, key)
-        branches: Sequence[Spec] = spec[1]
-        dfs = [self.compile(b) for b in branches]
-        if op == "OR":
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            return out.dropDuplicates(["role", "doc_id", "ann_id"])
-        if op == "AND":
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.join(
-                    d.select("role", "doc_id", "ann_id"),
-                    ["role", "doc_id", "ann_id"],
-                    "inner",
-                )
-            return out.dropDuplicates(["role", "doc_id", "ann_id"])
-        raise ValueError(f"unknown spec op: {op!r}")
+            flag = self._leaves.setdefault((op, *args), f"_l{len(self._leaves)}")
+            return F.col(f"{flag}_{role}" if role else flag)
+        if op not in ("AND", "OR"):
+            raise ValueError(f"unknown spec op: {op!r}")
+        return reduce(
+            operator.and_ if op == "AND" else operator.or_,
+            [self.condition(b, role) for b in args],
+        )
+
+    def flags(self, keys: list[str], roles: tuple = (None,)) -> DataFrame:
+        """One scan for every leaf a :meth:`condition` call has named:
+        ``max(flag)`` (masked by each of ``roles``) and ``max(score)`` per
+        ``keys`` group, over postings hash-partitioned by doc_id."""
+        leaf = {
+            name: (F.col("idx_kind") == idx_kind)
+            & (F.col("key") == key)
+            & F.col("type").isin(VARIANT_TYPES if etype == "VARIANT" else [etype])
+            for (idx_kind, etype, key), name in self._leaves.items()
+        }
+        scan = reduce(operator.or_, leaf.values())
+        if self.pmid is not None:  # pmid pushdown into the scan (P2)
+            scan = scan & (F.col("doc_id") == self.pmid)
+        rows = self.postings.filter(scan).select(
+            *_HT_COLS, *[c.alias(n) for n, c in leaf.items()]
+        )
+        aggs = [
+            F.max(F.col(n) & (F.col("role") == r) if r else F.col(n)).alias(
+                f"{n}_{r}" if r else n
+            )
+            for n in leaf
+            for r in roles
+        ]
+        return (
+            rows.repartition("doc_id")
+            .groupBy(*keys)
+            .agg(F.max("score").alias("score"), *aggs)
+        )
+
+    def compile(self, spec: Spec) -> DataFrame:
+        """(role, doc_id, ann_id, score) rows the spec matches."""
+        cond = self.condition(spec)
+        return self.flags(["role", "doc_id", "ann_id"]).filter(cond).select(*_HT_COLS)
 
 
 def evaluate_single(postings: DataFrame, spec: Spec, pmid: str | None = None) -> DataFrame:
     """Single-entity query → (doc_id, ann_id, score): an annotation matches
     if the entity appears as head OR tail (kb_utils.py:1638-1649)."""
-    ht = SpecCompiler(postings, pmid).compile(spec)
-    return ht.select("doc_id", "ann_id", "score").dropDuplicates(["doc_id", "ann_id"])
+    c = SpecCompiler(postings, pmid)
+    cond = c.condition(spec, "head") | c.condition(spec, "tail")
+    return c.flags(["doc_id", "ann_id"], _ROLES).filter(cond).select("doc_id", "ann_id", "score")
 
 
 def evaluate_pair(
@@ -100,15 +111,7 @@ def evaluate_pair(
     """Two-entity query: (e1.head ∩ e2.tail) ∪ (e1.tail ∩ e2.head) per
     annotation (kb_utils.py:1651-1668)."""
     c = SpecCompiler(postings, pmid)
-    e1, e2 = c.compile(e1_spec), c.compile(e2_spec)
-
-    def directed(h: DataFrame, t: DataFrame) -> DataFrame:
-        hh = h.filter(F.col("role") == "head").select("doc_id", "ann_id", "score")
-        tt = t.filter(F.col("role") == "tail").select("doc_id", "ann_id")
-        return hh.join(tt, ["doc_id", "ann_id"], "inner")
-
-    return (
-        directed(e1, e2)
-        .unionByName(directed(e2, e1))
-        .dropDuplicates(["doc_id", "ann_id"])
+    cond = (c.condition(e1_spec, "head") & c.condition(e2_spec, "tail")) | (
+        c.condition(e2_spec, "head") & c.condition(e1_spec, "tail")
     )
+    return c.flags(["doc_id", "ann_id"], _ROLES).filter(cond).select("doc_id", "ann_id", "score")

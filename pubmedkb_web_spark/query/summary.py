@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..functions.frames import local_frame
 from ..schemas import CRE_LABEL_WEIGHT
 
 
@@ -180,10 +181,7 @@ def select_ore(
         if rows:
             used.append(rows[0]["doc_id"])
             picked.append(rows[0])
-    if not picked:
-        return relations.limit(0)
-    spark = relations.sparkSession
-    return spark.createDataFrame(picked, schema=relations.schema)
+    return local_frame(relations.sparkSession, picked, relations.schema)
 
 
 # ---------------------------------------------------------------------------

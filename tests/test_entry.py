@@ -61,3 +61,33 @@ def test_entry_contract(spark):
     df = E.entry(spark)
     assert df.count() >= 0
     assert df.schema == E.entry(spark).schema
+
+
+def test_gate_index_cache_tracks_builder_source(spark, monkeypatch, tmp_path):
+    """A gate's derived index is keyed by its builder's source as well as
+    its data: after the builder changes, the gate builds a new index instead
+    of reusing the one an older builder wrote — and reuses its own."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = sorted(tuple(r) for r in E.q_bm25_docs(spark, SF).collect())
+    original = E.retrieval.build_bm25_index
+    calls = []
+
+    def changed_builder(corpus, out_path, *args, **kwargs):
+        calls.append(out_path)
+        return original(corpus, out_path, *args, **kwargs)
+
+    assert E._idx_cache_key(SF, "documents", changed_builder) != E._idx_cache_key(
+        SF, "documents", original
+    )
+    monkeypatch.setattr(E.retrieval, "build_bm25_index", changed_builder)
+    assert sorted(tuple(r) for r in E.q_bm25_docs(spark, SF).collect()) == first
+    assert len(calls) == 1, "a changed builder reused an older builder's index"
+    E.q_bm25_docs(spark, SF).collect()
+    assert len(calls) == 1
+    # published by one rename: only finished index directories remain
+    assert sorted(p.name.split("_idx_")[0] for p in tmp_path.iterdir()) == [
+        "spark_graft_bm25",
+        "spark_graft_bm25",
+    ]

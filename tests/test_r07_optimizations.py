@@ -93,3 +93,33 @@ def test_pair_contingency_matches_self_join_formulation(spark):
     assert got[("alpha", "gamma")] == (1, 2, 0, 1)
     assert got[("beta", "gamma")] == (1, 2, 0, 1)
     assert set(got) == {("alpha", "beta"), ("alpha", "gamma"), ("beta", "gamma")}
+
+
+@pytest.mark.parametrize("name", ["spec_and_or", "spec_pair", "rel_relevance_page"])
+def test_spec_gates_scan_postings_once(spark, name):
+    # a spec tree of any shape reads its postings source in ONE scan that
+    # flags every leaf — no per-leaf scans joined or unioned back together
+    # (tools/explain_audit.py ONE_SCAN checks the same shape)
+    plan = _plan(entry.queries()[name](spark, SF))
+    assert plan.count("FileScan") == 1
+    assert plan.count("Exchange") == 1
+
+
+def test_spec_evaluation_plans_one_exchange_below_its_aggregates(spark):
+    # one repartition(doc_id) feeds the flag aggregate; every doc-keyed
+    # aggregate above it reuses that partitioning
+    from pubmedkb_web_spark.query import spec
+
+    postings = entry._ht_postings(spark, SF)
+    leaf = lambda t: ("type_name", ("Token", t))  # noqa: E731
+    tree = ("AND", (leaf("spark"), ("OR", (leaf("join"), leaf("merge")))))
+    for hits in (
+        spec.SpecCompiler(postings).compile(tree),
+        spec.evaluate_single(postings, tree),
+        spec.evaluate_pair(postings, tree, leaf("hash")),
+    ):
+        lines = _plan(hits).splitlines()
+        exchanges = [i for i, line in enumerate(lines) if "Exchange" in line]
+        aggregates = [i for i, line in enumerate(lines) if "HashAggregate" in line]
+        assert len(exchanges) == 1 and aggregates
+        assert exchanges[0] > max(aggregates)  # printed deeper = runs before

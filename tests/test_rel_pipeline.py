@@ -6,10 +6,15 @@ were chosen to match (fixtures.py GOLDEN_*)."""
 
 from __future__ import annotations
 
+import itertools
+
+import pytest
 from pyspark.sql import functions as F
 
 from pubmedkb_web_spark import fixtures
 from pubmedkb_web_spark.query import rel, spec, summary
+
+import tests.oracle as oracle
 
 
 def test_golden_single_entity(small_kb):
@@ -194,3 +199,130 @@ def test_run_rel_releases_hits_cache(small_kb, spark):
         )
     after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert after == before
+
+
+# ----------------------------------------------- request shapes, job budget
+
+_VARIANT = ("type_id", ("VARIANT", fixtures.GOLDEN_SNP_ID))
+_DISEASE = ("type_id", ("Disease", fixtures.GOLDEN_DISEASE_ID))
+_NESTED = (
+    "OR",
+    (
+        (
+            "AND",
+            (
+                ("type_id", ("ProteinMutation", fixtures.GOLDEN_HGVS_ID)),
+                ("type_id", ("ProteinMutation", fixtures.GOLDEN_GENE_ID)),
+            ),
+        ),
+        _VARIANT,
+    ),
+)
+_BRAF = ("type_name", ("Gene", "braf"))
+
+# (e1, e2, pmid, sort_key, page_start): the VARIANT umbrella, nested
+# AND/OR, a type_name leaf, pairs with and without a pmid ("first" = the
+# first doc of the pair's hits), all four sorts, a later page, no match
+REQUEST_SHAPES = {
+    "variant_relevance": (_VARIANT, None, None, "relevance", 0),
+    "nested_citation": (_NESTED, None, None, "citation", 0),
+    "name_year_page2": (_BRAF, None, None, "year", 10),
+    "pair_impact": (_BRAF, _DISEASE, None, "journal_impact", 0),
+    "pair_pmid_relevance": (_VARIANT, _DISEASE, "first", "relevance", 0),
+    "no_match": (("type_id", ("Gene", "NO_SUCH_ENTITY_XYZ")), None, None, "relevance", 0),
+}
+
+
+_GROUP_IDS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it launched), counted under
+    a job group with the status tracker."""
+    sc = spark.sparkContext
+    group = f"rel-test-{next(_GROUP_IDS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _oracle_hits(posting_rows, e1, e2, pmid) -> set:
+    if e2 is None:
+        return {(d, a) for _r, d, a in oracle.eval_spec(posting_rows, e1, pmid)}
+    return oracle.eval_pair(posting_rows, e1, e2, pmid)
+
+
+@pytest.fixture(scope="module")
+def kb_rows(small_kb):
+    """The postings and annotations of ``small_kb`` as plain Python rows."""
+    postings = [r.asDict() for r in small_kb["entity_postings"].collect()]
+    anns = [
+        r.asDict()
+        for r in small_kb["annotations"].select("doc_id", "ann_id", "sent_idx", "annotator").collect()
+    ]
+    return postings, anns
+
+
+@pytest.mark.parametrize("shape", sorted(REQUEST_SHAPES))
+def test_run_rel_job_budget_and_statistics(small_kb, spark, kb_rows, shape):
+    """A rel request runs in a handful of Spark jobs (one postings scan, a
+    doc-partitioned page, one hydration union, the per-doc statistics), its
+    result frames are JVM-local, and its statistics equal a pure-Python
+    recount over the postings and annotations."""
+    postings, anns = kb_rows
+    e1, e2, pmid, sort_key, page_start = REQUEST_SHAPES[shape]
+    if pmid == "first":
+        pmid = min(d for d, _a in _oracle_hits(postings, e1, e2, None))
+    res, n_jobs = _jobs(
+        spark,
+        lambda: rel.run_rel(
+            small_kb["entity_postings"], small_kb["annotations"], small_kb["sentences"],
+            small_kb["meta"], e1_spec=e1, e2_spec=e2, pmid=pmid, sort_key=sort_key,
+            page_start=page_start, page_end=page_start + 10,
+        ),
+    )
+    assert n_jobs <= 10, f"{shape}: run_rel ran {n_jobs} Spark jobs"
+    (papers, relations), n_collect = _jobs(
+        spark, lambda: (res.papers.collect(), res.relations.collect())
+    )
+    assert n_collect == 0, f"{shape}: collecting the result frames ran {n_collect} jobs"
+
+    hits = _oracle_hits(postings, e1, e2, pmid)
+    matched = [a for a in anns if (a["doc_id"], a["ann_id"]) in hits]
+    by_annotator: dict[str, int] = {}
+    for a in matched:
+        by_annotator[a["annotator"]] = by_annotator.get(a["annotator"], 0) + 1
+    assert res.statistics == {
+        "papers": len({a["doc_id"] for a in matched}),
+        "sentences": len({(a["doc_id"], a["sent_idx"]) for a in matched}),
+        "relations": len(matched),
+        "relations_by_annotator": by_annotator,
+    }
+    page_docs = {p["doc_id"] for p in papers}
+    hit_docs = {d for d, _a in hits}
+    assert len(papers) == max(0, min(len(hit_docs), page_start + 10) - page_start)
+    assert page_docs <= hit_docs
+    assert [p["rank"] for p in papers] == list(range(page_start + 1, page_start + 1 + len(papers)))
+    assert {(r["doc_id"], r["ann_id"]) for r in relations} == {
+        (d, a) for d, a in hits if d in page_docs
+    }
+
+
+def test_deep_page_slice_matches_head_page(spark, monkeypatch):
+    """The range-partitioned deep-page path ranks exactly like the
+    TakeOrderedAndProject head path, and returns a JVM-local frame."""
+    df = spark.range(0, 200).select(
+        F.col("id").cast("string").alias("doc_id"), (F.col("id") % 7).cast("double").alias("s")
+    )
+    order = [F.col("s").desc(), *rel._doc_tiebreak()]
+    head = [tuple(r) for r in rel.ranked_slice(df, order, 40, 60).collect()]
+    monkeypatch.setattr(rel, "DEEP_PAGE_THRESHOLD", 0)
+    page = rel.ranked_slice(df, order, 40, 60)
+    rows, n_collect = _jobs(spark, page.collect)
+    assert sorted(tuple(r) for r in rows) == sorted(head)
+    assert n_collect == 0

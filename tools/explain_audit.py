@@ -6,6 +6,7 @@ Checks the things that matter at 100 TB and prints PASS/WARN per query:
 - top-k plans use TakeOrderedAndProject, not global Sort
 - no row-at-a-time Python eval (BatchEvalPython) in any hot path
   (ArrowEvalPython / FlatMapGroupsInPandas are the sanctioned slow paths)
+- optional exact node counts, e.g. a spec tree scans its postings once
 
 Usage: python tools/explain_audit.py [sf_dir] [names...]
 """
@@ -13,6 +14,7 @@ Usage: python tools/explain_audit.py [sf_dir] [names...]
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -21,17 +23,22 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as E  # noqa: E402
 from pubmedkb_web_spark.session import build_session  # noqa: E402
 
+# one parquet scan and one Exchange (the doc_id repartition below the
+# flag aggregate) for a spec tree of any shape
+ONE_SCAN = {"Scan parquet": 1, "Exchange": 1}
+
 EXPECT = {
-    # name: (must_contain, must_not_contain)
+    # name: (must_contain, must_not_contain[, {node: exact count}])
     "tpch_pricing_summary": (["PushedFilters: [IsNotNull(l_shipdate)", "HashAggregate"], ["BatchEvalPython"]),
     "top_revenue_orders": (["TakeOrderedAndProject"], ["BatchEvalPython"]),
     "market_join": (["BroadcastHashJoin"], ["SortMergeJoin", "BatchEvalPython"]),
     "cosine_topk": (["TakeOrderedAndProject"], ["BatchEvalPython", "ArrowEvalPython"]),
     # pagination/ranking must plan TakeOrderedAndProject: the window ranks
     # only the ≤page_end survivors, never the full relation in one task
-    "rel_relevance_page": (["TakeOrderedAndProject"], ["BatchEvalPython"]),
+    "rel_relevance_page": (["TakeOrderedAndProject"], ["BatchEvalPython"], ONE_SCAN),
     "rrf_fusion_orders": (["TakeOrderedAndProject"], ["BatchEvalPython"]),
-    "spec_and_or": ([], ["BatchEvalPython"]),
+    "spec_and_or": ([], ["BatchEvalPython"], ONE_SCAN),
+    "spec_pair": ([], ["BatchEvalPython"], ONE_SCAN),
     "minhash_signatures": (["HashAggregate"], ["BatchEvalPython", "ArrowEvalPython"]),
     "simhash_docs": (["HashAggregate"], ["BatchEvalPython", "ArrowEvalPython"]),
     "bm25_docs": (["BroadcastHashJoin"], ["BatchEvalPython"]),
@@ -75,7 +82,7 @@ def main() -> None:
     spark = build_session(cores=8, shuffle_partitions=8, driver_memory="8g")
     qs = E.queries()
     failures = 0
-    for name, (need, forbid) in EXPECT.items():
+    for name, (need, forbid, *counts) in EXPECT.items():
         if only and name not in only:
             continue
         # merged driver gates (round 6) keep their per-capability q_
@@ -87,10 +94,19 @@ def main() -> None:
         plan = buf.getvalue()
         missing = [s for s in need if s not in plan]
         present = [s for s in forbid if s in plan]
-        status = "PASS" if not missing and not present else "WARN"
+        # node detail headers of the formatted plan: "(4) Exchange"
+        miscounted = {
+            node: n
+            for node, want in (counts[0] if counts else {}).items()
+            if (n := len(re.findall(rf"^\(\d+\) {node}\b", plan, re.M))) != want
+        }
+        status = "PASS" if not missing and not present and not miscounted else "WARN"
         if status == "WARN":
             failures += 1
-        print(f"{status}  {name:26s} missing={missing} forbidden_present={present}")
+        print(
+            f"{status}  {name:26s} missing={missing} forbidden_present={present}"
+            f" miscounted={miscounted}"
+        )
         if only:
             print(plan)
     spark.stop()
