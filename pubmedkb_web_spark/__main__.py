@@ -44,7 +44,7 @@ def cmd_build(args) -> None:
     n = tables["triples"].count()
     dt = time.time() - t0
     stages = {
-        name: {"rows": r.row_count, "sec": r.seconds, "recomputed": r.recomputed}
+        name: {"rows": r.row_count, "sec": round(r.seconds, 3), "recomputed": r.recomputed}
         for name, r in tables["_pipeline"].results.items()
     }
     print(json.dumps({"triples": n, "sec": round(dt, 2),

@@ -468,14 +468,27 @@ def build_mentions(
     entity_dict: DataFrame,
     max_tokens: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full M1: source → (sentences, mentions).
+    """Full M1: source → (sentences, mentions); see :func:`link_mentions`."""
+    sentences = split_sentences(source_ingested)
+    return sentences, link_mentions(sentences, entity_dict, max_tokens)
+
+
+def link_mentions(
+    sentences: DataFrame,
+    entity_dict: DataFrame,
+    max_tokens: int | None = None,
+) -> DataFrame:
+    """sentences → mentions: span enumeration, dictionary match, overlap
+    resolution.
 
     ``max_tokens`` (max dictionary-name token count, bounds the n-gram
-    explode factor) is a driver-side scalar; pass it precomputed to keep
-    the tiny dictionary job off this stage's critical path (the pipeline
-    runner computes it once per run — round-3 VERDICT #3 driver-phase
-    hygiene). None → computed here."""
-    sentences = split_sentences(source_ingested)
+    explode factor) is a driver-side scalar; None → one narrow aggregate
+    over the dictionary, run here while the plan is built.
+
+    The span window and the per-sentence grouping both key on
+    (doc_id, sent_idx) and the dictionary join is a broadcast, so a
+    ``sentences`` already hash-partitioned on those columns is shuffled
+    nowhere below."""
     if max_tokens is None:
         max_tokens = (
             entity_dict.select(F.max(F.size(F.split(F.col("name"), " "))).alias("m"))
@@ -483,7 +496,7 @@ def build_mentions(
         )
     spans = enumerate_spans(sentences, max_tokens=int(max_tokens))
     candidates = dictionary_candidates(spans, entity_dict)
-    mentions = resolve_overlaps(candidates).select(
+    return resolve_overlaps(candidates).select(
         "doc_id",
         "sent_idx",
         "mention_idx",
@@ -493,4 +506,3 @@ def build_mentions(
         "offset",
         "content_sha256",
     )
-    return sentences, mentions

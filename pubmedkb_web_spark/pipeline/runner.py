@@ -1,12 +1,25 @@
 """Pipeline orchestration with per-stage checkpoints, lineage and metrics.
 
+A pipeline is a table of :class:`Stage` rows (name, build, upstream,
+config, partition columns). :meth:`CheckpointedPipeline.run` starts each
+stage as soon as all of its upstreams have committed, so stages that do
+not depend on each other run concurrently from driver threads and Spark
+schedules their jobs side by side. No stage sets a session conf: the
+stages share one session, and a stage that needs its own shuffle width
+plans it (``repartition(n, ...)``), where no other stage can see it.
+
 North-rule requirements: resumable from per-stage checkpoints with
 per-partition lineage + metrics. Each stage writes its output parquet and a
 ``_graft_meta.json`` marker containing the stage fingerprint (name + config
-+ upstream fingerprints — a Merkle-style lineage chain), the row count and
-per-partition row metrics. On resume, a stage whose marker matches its
-fingerprint is *read back* instead of recomputed; the first stage with a
-stale/missing marker recomputes, and everything downstream follows.
++ upstream fingerprints — a Merkle-style lineage chain), the row count,
+per-partition row metrics, the schema it was written with, and when the
+stage started and how long it took.
+The marker is renamed into place after the parquet commits, so a stage has
+committed exactly when its marker exists. On resume, a stage whose marker
+matches its fingerprint is *read back* instead of recomputed; a missing,
+stale or unreadable marker recomputes the stage, and everything downstream
+of a recomputed stage follows. Markers, footers and side files go through
+one filesystem resolved from the root (:class:`RootFs`).
 
 Determinism guarantees that make resume byte-stable: no
 monotonically_increasing_id, no RNG, no wall-clock anywhere in the stages
@@ -17,15 +30,24 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, TypeVar
 
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import fixtures
+from ..functions.frames import collect_local
 from . import canonicalize, extractors, materialize, mentions
 
 MARKER = "_graft_meta.json"
+T = TypeVar("T")
 
 
 def _module_source_bytes(name: str, loader, file_path: str | None) -> bytes:
@@ -94,31 +116,48 @@ def _fingerprint(name: str, config: dict, upstream: list[str]) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-def _partition_metrics(path: str) -> list[dict]:
-    """Per-output-partition row counts read from the committed parquet
-    FOOTERS (pyarrow metadata only — no Spark job, no data scan, ~ms).
+class RootFs:
+    """The filesystem of a checkpoint root (a local path or a ``file://``
+    URI), for the files the pipeline keeps beside the stage parquet; paths
+    are relative to the root. pyarrow's, not the JVM's Hadoop
+    ``FileSystem``: there, the py4j round trips of the footer reads and
+    marker writes took ~0.5 s of a 5 s warm 1000-doc build."""
 
-    Round 1 computed this with a groupBy(spark_partition_id()) pass, which
-    added a fixed extra job per stage — a major share of the ~25 s serial
-    stage-commit floor that capped end-to-end scaling efficiency. The
-    committed files ARE the stage's partitions, so footer counts are the
-    honest per-partition lineage record."""
-    import pyarrow.parquet as pq
+    def __init__(self, root: str):
+        self._fs, self._root = pafs.FileSystem.from_uri(
+            root if "://" in root else os.path.abspath(root)
+        )
 
-    files = []
-    for root, _dirs, fnames in os.walk(path):
-        for fn in fnames:
-            if fn.endswith(".parquet"):
-                files.append(os.path.join(root, fn))
-    files.sort()
-    return [
-        {
-            "partition": i,
-            "rows": int(pq.ParquetFile(f).metadata.num_rows),
-            "file": os.path.relpath(f, path),
-        }
-        for i, f in enumerate(files)
-    ]
+    def _abs(self, path: str) -> str:
+        return f"{self._root}/{path}"
+
+    def read_text(self, path: str) -> str:
+        with self._fs.open_input_stream(self._abs(path)) as f:
+            return f.read().decode()
+
+    def publish_text(self, path: str, text: str) -> None:
+        """Write under a temporary name, then rename into place: a reader
+        sees no file or the whole file, never a part of one."""
+        tmp = self._abs(path + ".tmp")
+        with self._fs.open_output_stream(tmp) as f:
+            f.write(text.encode())
+        self._fs.move(tmp, self._abs(path))
+
+    def partition_metrics(self, path: str) -> list[dict]:
+        """Per-file row counts of the committed parquet under ``path``, read
+        from the FOOTERS (no Spark job, no data scan): the committed files
+        ARE the stage's partitions, so these are its per-partition lineage."""
+        base = self._abs(path)
+        infos = self._fs.get_file_info(pafs.FileSelector(base, recursive=True))
+        files = sorted(i.path for i in infos if i.is_file and i.path.endswith(".parquet"))
+        return [
+            {
+                "partition": i,
+                "rows": pq.read_metadata(f, filesystem=self._fs).num_rows,
+                "file": f[len(base) + 1:],
+            }
+            for i, f in enumerate(files)
+        ]
 
 
 @dataclass
@@ -129,97 +168,296 @@ class StageResult:
     row_count: int
     recomputed: bool
     partitions: list[dict] = field(default_factory=list)
-    seconds: float = 0.0
+    seconds: float = 0.0  # from start to commit (or read-back)
+    started: float = 0.0  # seconds since the pipeline began
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One row of a stage table. ``build(pipe)`` plans the stage's output
+    from its committed upstreams: ``pipe.frames[u]`` (read back from the
+    checkpoint) and ``pipe.results[u]`` (row count, partitions)."""
+
+    name: str
+    build: Callable[["CheckpointedPipeline"], DataFrame]
+    upstream: tuple[str, ...] = ()
+    config: dict = field(default_factory=dict)
+    partition_by: tuple[str, ...] = ()
 
 
 class CheckpointedPipeline:
-    """Runs named stages with checkpoint/resume over a parquet root."""
+    """Runs a stage table with checkpoint/resume over a parquet root."""
 
     def __init__(self, spark: SparkSession, out_dir: str, resume: bool = True):
         self.spark = spark
         self.out_dir = out_dir
         self.resume = resume
+        self.fs = RootFs(out_dir)
         self.results: dict[str, StageResult] = {}
+        self.frames: dict[str, DataFrame] = {}
+        self._t0 = time.perf_counter()
 
-    def _marker_path(self, name: str) -> str:
-        return os.path.join(self.out_dir, name, MARKER)
-
-    def stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        config: dict | None = None,
-        upstream: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        session_confs: dict[str, str] | None = None,
-    ) -> DataFrame:
-        """``session_confs``: SQL confs set for THIS stage's execution and
-        restored afterwards. They are session-wide, so they are race-free
-        only while no other stage runs: the tail stages of
-        ``run_kg_pipeline`` run concurrently on a thread pool, and the one
-        stage that sets confs (``mentions``) finishes before that pool
-        starts. This is how heterogeneous stages coexist in one
-        session: the mentions window sort degrades superlinearly once
-        post-shuffle partitions grow past a few MB (3.2M docs, 8 cores:
-        391 s at 64 MB-ish partitions vs 110 s at 4 MB), while the
-        aggregation/write stages pay pure task overhead at 4 MB (tail wall
-        4× worse) — no single advisory size serves both."""
-        config = config or {}
-        upstream_fps = [self.results[u].fingerprint for u in (upstream or [])]
-        fp = _fingerprint(name, config, upstream_fps)
-        path = os.path.join(self.out_dir, name)
-        marker = self._marker_path(name)
-
-        if self.resume and os.path.exists(marker):
-            with open(marker) as f:
-                meta = json.load(f)
-            if meta.get("fingerprint") == fp:
-                df = self.spark.read.parquet(path)
-                self.results[name] = StageResult(
-                    name, path, fp, meta["row_count"], recomputed=False,
-                    partitions=meta.get("partitions", []),
-                )
-                return df
-
-        import time
-
-        t0 = time.time()
-        saved: dict[str, str | None] = {}
-        for k, v in (session_confs or {}).items():
-            saved[k] = self.spark.conf.get(k, None)
-            self.spark.conf.set(k, v)
+    def _read_marker(self, marker: str) -> dict | None:
+        """The marker's fields; None when it is missing or unreadable (a
+        write cut short, a hand edit) — either way the stage is stale."""
         try:
-            df = build()
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
-        out = self.spark.read.parquet(path)
-        parts = _partition_metrics(path)
-        row_count = sum(p["rows"] for p in parts)
-        with open(marker, "w") as f:
-            json.dump(
-                {
-                    "stage": name,
-                    "fingerprint": fp,
-                    "upstream": upstream or [],
-                    "row_count": row_count,
-                    "partitions": parts,
-                    "config": config,
-                },
-                f,
-                indent=1,
-            )
-        self.results[name] = StageResult(
-            name, path, fp, row_count, True, parts, seconds=round(time.time() - t0, 3)
+            meta = json.loads(self.fs.read_text(marker))
+        except (OSError, ValueError):
+            return None
+        return meta if isinstance(meta, dict) and {"row_count", "schema"} <= meta.keys() else None
+
+    def stage(self, spec: Stage, started: float) -> DataFrame:
+        """Read one stage back from its checkpoint, or build, write and
+        commit it. Its upstreams must have committed. ``started`` (seconds
+        since the pipeline began) is when the scheduler submitted it.
+
+        Stages run concurrently, so a build must not touch shared session
+        state: a stage that wants its own shuffle width plans an explicit
+        ``repartition`` instead of setting ``spark.sql.shuffle.partitions``
+        (which AQE would also coalesce)."""
+        fp = _fingerprint(spec.name, spec.config, [self.results[u].fingerprint for u in spec.upstream])
+        path, marker = os.path.join(self.out_dir, spec.name), f"{spec.name}/{MARKER}"
+        meta = self._read_marker(marker) if self.resume else None
+        recomputed = (
+            meta is None or meta.get("fingerprint") != fp
+            or any(self.results[u].recomputed for u in spec.upstream)
         )
-        return out
+        if recomputed:
+            df = spec.build(self)
+            writer = df.write.mode("overwrite")
+            if spec.partition_by:
+                writer = writer.partitionBy(*spec.partition_by)
+            writer.parquet(path)
+            parts = self.fs.partition_metrics(spec.name)
+            meta = {
+                "stage": spec.name, "fingerprint": fp, "upstream": list(spec.upstream),
+                "row_count": sum(p["rows"] for p in parts), "partitions": parts,
+                "config": spec.config, "started": started,
+                # the data columns as written: reading back with them skips
+                # parquet schema inference, a Spark job per read that queues
+                # behind the jobs of every stage already running
+                "schema": StructType(
+                    [f for f in df.schema.fields if f.name not in spec.partition_by]
+                ).jsonValue(),
+            }
+        df = self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(path)
+        seconds = time.perf_counter() - self._t0 - started
+        if recomputed:
+            self.fs.publish_text(marker, json.dumps({**meta, "seconds": seconds}, indent=1))
+        self.results[spec.name] = StageResult(
+            spec.name, path, fp, meta["row_count"], recomputed, meta.get("partitions", []),
+            seconds, started,
+        )
+        return df
+
+    def run(self, stages: list[Stage]) -> dict[str, DataFrame]:
+        """Run a stage table: submit every stage whose upstreams have all
+        committed, wait for the first to finish, repeat. A stage that
+        raises stops new submissions; its error is re-raised once the
+        stages already running have finished. Returns the committed
+        frames by name, in commit order."""
+        waiting, running = list(stages), {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=max(1, len(stages))) as pool:
+            while True:
+                for s in [s for s in waiting if error is None and set(s.upstream) <= self.frames.keys()]:
+                    waiting.remove(s)
+                    running[pool.submit(self.stage, s, time.perf_counter() - self._t0)] = s.name
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in done:
+                    name = running.pop(f)
+                    if f.exception() is None:
+                        self.frames[name] = f.result()
+                    else:
+                        error = error or f.exception()
+        if error is not None:
+            raise error
+        if waiting:
+            raise ValueError(f"stages whose upstream is not in the table: {[s.name for s in waiting]}")
+        return self.frames
+
+
+def _once(make: Callable[[], T]) -> Callable[[], T]:
+    """``make()`` evaluated once, by whichever stage thread asks first."""
+    lock, made = threading.Lock(), []
+
+    def get() -> T:
+        with lock:
+            if not made:
+                made.append(make())
+        return made[0]
+
+    return get
+
+
+def kg_stages(
+    spark: SparkSession,
+    n_docs: int | None = None,
+    source_df: DataFrame | None = None,
+    seed: int = fixtures.SEED,
+    with_dedup: bool = False,
+    with_ann_index: bool | str = False,
+    with_quality: bool = False,
+) -> list[Stage]:
+    """The M0→M4 stage table of :func:`run_kg_pipeline`."""
+
+    # built by the first stage that needs it, off the source stage's path,
+    # and not cached: it is a JVM-local relation already, and caching it
+    # added a materialization job plus a cache stage to every plan reading
+    # it (1000 docs, 4 cores: ~1 s of the first build's critical path)
+    dictionary = _once(lambda: fixtures.entity_dict_df(spark, seed))
+    # a broadcast of a JVM-local frame runs no job, where the dictionary
+    # `distinct` re-ran its shuffle and broadcast jobs for each of the four
+    # typed lookups of chem_disease and cgd_paths
+    entity_types = _once(lambda: collect_local(dictionary().select("id", "type").distinct()))
+    glof_terms = sorted(t for t, _ in fixtures.GLOF_TERMS)
+
+    def build_mentions(p: CheckpointedPipeline) -> DataFrame:
+        # The n-gram window sort is the one stage whose cost is superlinear
+        # in post-shuffle partition size (3.2M docs / 8 cores: 391 s at
+        # session defaults vs 110 s with data-sized small partitions — the
+        # sort thrashes once a partition's token rows outgrow the
+        # execution-memory sweet spot). Its width scales with the SENTENCE
+        # count (the committed sentences stage's lineage) as one explicit
+        # repartition, which AQE never coalesces, so the floor is one task
+        # wave (1000 docs, 4 cores: 0.58 s at two waves, 0.41 s at one);
+        # every other stage keeps the session's aggregation-friendly settings.
+        width = max(
+            spark.sparkContext.defaultParallelism, p.results["sentences"].row_count // 50_000
+        )
+        sents = p.frames["sentences"].repartition(width, "doc_id", "sent_idx")
+        # the dictionary's max-name-token scalar is left to link_mentions: a
+        # one-row aggregate inside this stage, off canonical_map's path
+        return mentions.link_mentions(sents, dictionary())
+
+    def build_glof(p: CheckpointedPipeline) -> DataFrame:
+        # GLOF track (server.py:1292-1334 + 1472-1523): GLOF term mentions,
+        # overlap-subtracted against normal mentions, rolled into the
+        # entity-GLOF evidence table that /query_ent_glof serves.
+        gm = mentions.build_glof_mentions(
+            p.frames["sentences"], fixtures.glof_dict_df(spark),
+            max(len(t.split(" ")) for t in glof_terms),
+        )
+        return mentions.glof_evidence(mentions.subtract_glof_overlaps(p.frames["mentions"], gm))
+
+    stages = [
+        Stage(
+            "source",
+            lambda p: fixtures.ingest(
+                source_df if source_df is not None else fixtures.source_table(spark, n_docs or 0, seed)
+            ),
+            config={"n_docs": n_docs, "seed": seed, "external": source_df is not None},
+        ),
+        Stage("canonical_map", lambda p: canonicalize.canonical_map(dictionary()), config={"seed": seed}),
+        Stage("sentences", lambda p: mentions.split_sentences(p.frames["source"]), ("source",)),
+        Stage("meta", lambda p: fixtures.meta_table(spark, p.frames["source"], seed), ("source",)),
+        Stage("mentions", build_mentions, ("sentences",)),
+        Stage("glof", build_glof, ("sentences", "mentions"), config={"terms": glof_terms}),
+        # the committed sentences table is one row per (doc_id, sent_idx) by
+        # construction, so its lineage row_count IS the distinct sentence
+        # total — passing it removes a full distinct+count job over the
+        # sentence table from this stage's critical path
+        Stage("annotations", lambda p: extractors.extract_all(
+            p.frames["mentions"], p.frames["sentences"],
+            n_sentences=p.results["sentences"].row_count,
+        ), ("sentences", "mentions")),
+        Stage("triples", lambda p: materialize.dedup_triples(canonicalize.rewrite_triples(
+            extractors.to_triples(p.frames["annotations"]), p.frames["canonical_map"]
+        )), ("annotations", "canonical_map"), partition_by=("annotator",)),
+        Stage("entity_postings", lambda p: materialize.build_entity_postings(
+            p.frames["annotations"]
+        ).repartition(spark.sparkContext.defaultParallelism, "type", "key"), ("annotations",)),
+        Stage("pair_stats", lambda p: materialize.build_pair_stats(p.frames["triples"]), ("triples",)),
+        Stage("chem_disease", lambda p: materialize.build_chem_disease(
+            p.frames["triples"], entity_types()
+        ), ("triples",)),
+        Stage("cgd_paths", lambda p: materialize.build_cgd_paths(
+            p.frames["triples"], entity_types()
+        ), ("triples",)),
+    ]
+    if with_quality:
+        from ..ops import textstats as textstats_ops
+
+        stages.append(Stage(
+            "doc_quality",
+            lambda p: textstats_ops.document_quality(p.frames["source"], text_col="content"),
+            ("source",),
+            # published defaults; named in the fingerprint so a future
+            # threshold change re-runs the stage instead of resuming
+            config={"families": "gopher+pii+c4", "thresholds": "published-defaults"},
+        ))
+    if with_dedup:
+        from ..ops import dedup as dedup_ops
+
+        dedup_cfg = {
+            "threshold": 0.7, "n_shingle": 3, "num_hashes": 8,
+            "bands": 4, "max_bucket_size": 1024,
+        }
+
+        def build_dedup(p: CheckpointedPipeline) -> DataFrame:
+            # xxhash64 (portable=False) is the lock-free scale path;
+            # shingle/signature relations materialize ONCE under the
+            # pipeline root so the candidate/verify branches re-scan
+            # thin tables instead of recomputing the corpus pass
+            return dedup_ops.near_duplicates_minhash(
+                p.frames["source"],
+                threshold=dedup_cfg["threshold"],
+                id_col="doc_id",
+                text_col="content",
+                portable=False,
+                work_dir=os.path.join(p.out_dir, "near_dup_work"),
+                max_bucket_size=dedup_cfg["max_bucket_size"],
+            )
+
+        stages.append(Stage("near_dup_pairs", build_dedup, ("source",), config=dedup_cfg))
+    if with_ann_index:
+        from ..ops import similarity as sim_ops
+
+        def embed(p: CheckpointedPipeline) -> DataFrame:
+            return sim_ops.embed_text(
+                p.frames["source"], text_col="content", id_col="doc_id",
+                dim=ann_cfg["dim"], portable=False,
+            )
+
+        if str(with_ann_index).lower() != "ivf":
+            ann_cfg = {"kind": "lsh", "dim": 16, "n_planes": 8}
+
+            def build_ann(p: CheckpointedPipeline) -> DataFrame:
+                sig = sim_ops.hyperplane_signature(
+                    F.col("embedding"), ann_cfg["dim"], ann_cfg["n_planes"]
+                )
+                return embed(p).withColumn("_sig", sig)
+
+            ann_part = "_sig"
+        else:
+            ann_cfg = {"kind": "ivf", "dim": 16, "n_centroids": 8, "n_iter": 4}
+
+            def build_ann(p: CheckpointedPipeline) -> DataFrame:
+                emb = embed(p)
+                centroids = sim_ops.ivf_train(
+                    emb, n_centroids=ann_cfg["n_centroids"], n_iter=ann_cfg["n_iter"],
+                    id_col="doc_id",
+                )
+                # probe-side artifact, persisted beside the stage parquet: a
+                # RESUMED stage skips build_ann, so the file written by the
+                # original run is the contract
+                p.fs.publish_text("ann_index_centroids.json", json.dumps(centroids))
+                return sim_ops.ivf_assign(emb, centroids)
+
+            ann_part = "_cent"
+
+        # the partition column ("_sig" sign buckets / "_cent" inverted
+        # lists) gives the stage parquet the exact partition-pruned layout
+        # build_ann_index / ivf_build write: probe-set filters touch only
+        # the probed buckets' directories. "kind" in the config makes
+        # switching layouts a fingerprint change, so a resume never serves
+        # one layout as the other.
+        stages.append(Stage(
+            "ann_index", build_ann, ("source",), config=ann_cfg, partition_by=(ann_part,)
+        ))
+    return stages
 
 
 def run_kg_pipeline(
@@ -227,14 +465,21 @@ def run_kg_pipeline(
     out_dir: str,
     n_docs: int | None = None,
     source_df: DataFrame | None = None,
-    entity_dict: DataFrame | None = None,
     seed: int = fixtures.SEED,
     resume: bool = True,
     with_dedup: bool = False,
     with_ann_index: bool | str = False,
     with_quality: bool = False,
 ) -> dict[str, DataFrame]:
-    """Full M0→M4 build. Returns the materialized DataFrames by name.
+    """Full M0→M4 build. Returns the materialized DataFrames by name, and
+    the pipeline (per-stage :class:`StageResult` records) as ``_pipeline``.
+
+    ``out_dir`` is a plain path or a ``file://`` URI. Every stage starts as
+    soon as its upstreams commit: ``source`` and ``canonical_map`` at once;
+    ``sentences`` and ``meta`` (and the optional stages below) on the
+    source; ``mentions`` on the sentences; ``glof`` and ``annotations`` on
+    the mentions; ``triples`` and ``entity_postings`` on the annotations
+    (plus ``canonical_map`` for triples); the rest on the triples.
 
     ``with_quality`` adds a ``doc_quality`` stage: the one-scan composed
     corpus-cleaning pass (``ops.textstats.document_quality`` — Gopher
@@ -250,283 +495,13 @@ def run_kg_pipeline(
     ``"ivf"`` trains the deterministic coarse quantizer, writes inverted
     lists PARTITIONED by ``_cent`` (the ivf_build shape) plus the
     centroid JSON (``out_dir/ann_index_centroids.json``) probes need.
-    Both are OPTIONAL tail
-    stages with the same fingerprint-resume contract as every other
-    stage; they read only the completed source stage, so enabling them
-    never changes the core tables' counts (round-4 VERDICT #7)."""
+    Both are OPTIONAL stages with the same fingerprint-resume contract as
+    every other stage; they read only the completed source stage, so
+    enabling them never changes the core tables' counts (round-4 VERDICT
+    #7)."""
     pipe = CheckpointedPipeline(spark, out_dir, resume=resume)
-    if entity_dict is None:
-        entity_dict = fixtures.entity_dict_df(spark, seed)
-    entity_dict = entity_dict.cache()
-
-    src_cfg = {"n_docs": n_docs, "seed": seed, "external": source_df is not None}
-    source = pipe.stage(
-        "source",
-        lambda: fixtures.ingest(
-            source_df if source_df is not None else fixtures.source_table(spark, n_docs or 0, seed)
-        ),
-        config=src_cfg,
-    )
-
-    # driver-side scalar computed ONCE per run, before any stage needs it
-    # (round-3 VERDICT #3: keep tiny dictionary jobs off stage critical
-    # paths — entity_dict is cached, this is one narrow aggregate)
-    from pyspark.sql import functions as F
-
-    dict_max_tokens = int(
-        entity_dict.agg(
-            F.max(F.size(F.split("name", " "))).alias("m")
-        ).collect()[0]["m"]
-    )
-
-    sents_ments: dict[str, DataFrame] = {}
-
-    def build_m1() -> tuple[DataFrame, DataFrame]:
-        if "pair" not in sents_ments:
-            s, m = mentions.build_mentions(source, entity_dict, max_tokens=dict_max_tokens)
-            sents_ments["pair"] = (s, m)
-        return sents_ments["pair"]
-
-    sentences = pipe.stage("sentences", lambda: build_m1()[0], upstream=["source"])
-    # The n-gram window sort is the one stage whose cost is superlinear in
-    # post-shuffle partition size (3.2M docs / 8 cores: 391 s at session
-    # defaults vs 110 s with data-sized small partitions — the sort
-    # thrashes once a partition's token rows outgrow the execution-memory
-    # sweet spot). Scale its shuffle width with the SENTENCE count (known
-    # from the completed sentences stage's lineage) and pin a small AQE
-    # advisory so coalescing keeps sort partitions small; every other
-    # stage keeps the session's aggregation-friendly settings.
-    m_shuffle = max(
-        spark.sparkContext.defaultParallelism * 2,
-        pipe.results["sentences"].row_count // 50_000,
-    )
-    mention_df = pipe.stage(
-        "mentions",
-        lambda: build_m1()[1],
-        upstream=["source"],
-        session_confs={
-            "spark.sql.shuffle.partitions": str(m_shuffle),
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
-        },
-    )
-
-    # GLOF track (server.py:1292-1334 + 1472-1523): GLOF term mentions,
-    # overlap-subtracted against normal mentions, rolled into the
-    # entity-GLOF evidence table that /query_ent_glof serves.
-    glof_dict = fixtures.glof_dict_df(spark)
-    glof_max_tokens = max(len(t.split(" ")) for t, _ in fixtures.GLOF_TERMS)
-
-    def build_glof() -> DataFrame:
-        gm = mentions.build_glof_mentions(sentences, glof_dict, glof_max_tokens)
-        merged = mentions.subtract_glof_overlaps(mention_df, gm)
-        return mentions.glof_evidence(merged)
-
-    # Independent stages run CONCURRENTLY from driver threads: Spark
-    # schedules their jobs side by side, overlapping each stage's commit
-    # (write + footer metrics) with the others' compute instead of paying
-    # the serial per-stage floor once per stage. Dependencies are already
-    # materialized when each is submitted, so every submission only reads
-    # completed results.
-    from concurrent.futures import ThreadPoolExecutor
-
-    entity_types = entity_dict.select("id", "type").distinct()
-    tail_workers = int(os.environ.get("SPARK_GRAFT_TAIL_WORKERS", "6"))
-    with ThreadPoolExecutor(max_workers=tail_workers) as ex:
-        # r7: canonical_map (needs only the entity dict) and glof (needs
-        # the committed sentences + mentions) used to run SERIALLY around
-        # the triples stage — ~3 s and the slowest tail stage respectively,
-        # both on the critical path. Submitting them here overlaps both
-        # with the annotations stage, whose shuffle stalls leave executors
-        # idle (guide §2.6: overlap independent jobs to back-fill).
-        # annotations itself sets no session confs, so there is no
-        # conf-race with concurrently built stages.
-        f_canon = ex.submit(
-            pipe.stage,
-            "canonical_map",
-            lambda: canonicalize.canonical_map(entity_dict),
-            config={"seed": seed},
-        )
-        f_glof = ex.submit(
-            pipe.stage, "glof", build_glof,
-            upstream=["sentences", "mentions"],
-            config={"terms": sorted(t for t, _ in fixtures.GLOF_TERMS)},
-        )
-        annotations = pipe.stage(
-            "annotations",
-            # the committed sentences table is one row per (doc_id, sent_idx)
-            # by construction, so its lineage row_count IS the distinct
-            # sentence total — passing it removes a full distinct+count job
-            # over the sentence table from this stage's critical path
-            lambda: extractors.extract_all(
-                mention_df,
-                sentences,
-                n_sentences=pipe.results["sentences"].row_count,
-            ),
-            upstream=["sentences", "mentions"],
-        )
-        canon = f_canon.result()
-        triples = pipe.stage(
-            "triples",
-            lambda: materialize.dedup_triples(
-                canonicalize.rewrite_triples(extractors.to_triples(annotations), canon)
-            ),
-            upstream=["annotations", "canonical_map"],
-            partition_by=["annotator"],
-        )
-
-        f_postings = ex.submit(
-            pipe.stage,
-            "entity_postings",
-            lambda: materialize.build_entity_postings(annotations).repartition(
-                spark.sparkContext.defaultParallelism, "type", "key"
-            ),
-            upstream=["annotations"],
-        )
-        f_pair = ex.submit(
-            pipe.stage, "pair_stats",
-            lambda: materialize.build_pair_stats(triples), upstream=["triples"],
-        )
-        f_chem = ex.submit(
-            pipe.stage, "chem_disease",
-            lambda: materialize.build_chem_disease(triples, entity_types),
-            upstream=["triples"],
-        )
-        f_cgd = ex.submit(
-            pipe.stage, "cgd_paths",
-            lambda: materialize.build_cgd_paths(triples, entity_types),
-            upstream=["triples"],
-        )
-        f_meta = ex.submit(
-            pipe.stage, "meta",
-            lambda: fixtures.meta_table(spark, source, seed), upstream=["source"],
-        )
-        f_dedup = f_ann = f_quality = None
-        if with_quality:
-            from ..ops import textstats as textstats_ops
-
-            f_quality = ex.submit(
-                pipe.stage,
-                "doc_quality",
-                lambda: textstats_ops.document_quality(source, text_col="content"),
-                upstream=["source"],
-                # published defaults; named in the fingerprint so a future
-                # threshold change re-runs the stage instead of resuming
-                config={"families": "gopher+pii+c4", "thresholds": "published-defaults"},
-            )
-        if with_dedup:
-            from ..ops import dedup as dedup_ops
-
-            dedup_cfg = {
-                "threshold": 0.7, "n_shingle": 3, "num_hashes": 8,
-                "bands": 4, "max_bucket_size": 1024,
-            }
-
-            def build_dedup() -> DataFrame:
-                # xxhash64 (portable=False) is the lock-free scale path;
-                # shingle/signature relations materialize ONCE under the
-                # pipeline root so the candidate/verify branches re-scan
-                # thin tables instead of recomputing the corpus pass
-                return dedup_ops.near_duplicates_minhash(
-                    source,
-                    threshold=dedup_cfg["threshold"],
-                    id_col="doc_id",
-                    text_col="content",
-                    portable=False,
-                    work_dir=os.path.join(out_dir, "near_dup_work"),
-                    max_bucket_size=dedup_cfg["max_bucket_size"],
-                )
-
-            f_dedup = ex.submit(
-                pipe.stage, "near_dup_pairs", build_dedup,
-                upstream=["source"], config=dedup_cfg,
-            )
-        if with_ann_index:
-            from ..ops import similarity as sim_ops
-
-            ann_kind = (
-                "ivf" if str(with_ann_index).lower() == "ivf" else "lsh"
-            )
-            if ann_kind == "lsh":
-                ann_cfg = {"kind": "lsh", "dim": 16, "n_planes": 8}
-
-                def build_ann() -> DataFrame:
-                    emb = sim_ops.embed_text(
-                        source, text_col="content", id_col="doc_id",
-                        dim=ann_cfg["dim"], portable=False,
-                    )
-                    return emb.withColumn(
-                        "_sig",
-                        sim_ops.hyperplane_signature(
-                            F.col("embedding"), ann_cfg["dim"], ann_cfg["n_planes"]
-                        ),
-                    )
-
-                ann_part = "_sig"
-            else:
-                ann_cfg = {
-                    "kind": "ivf", "dim": 16, "n_centroids": 8, "n_iter": 4,
-                }
-
-                def build_ann() -> DataFrame:
-                    emb = sim_ops.embed_text(
-                        source, text_col="content", id_col="doc_id",
-                        dim=ann_cfg["dim"], portable=False,
-                    )
-                    centroids = sim_ops.ivf_train(
-                        emb,
-                        n_centroids=ann_cfg["n_centroids"],
-                        n_iter=ann_cfg["n_iter"],
-                        id_col="doc_id",
-                    )
-                    # probe-side artifact, persisted beside the stage
-                    # parquet: a RESUMED stage skips build_ann, so the
-                    # file written by the original run is the contract
-                    with open(
-                        os.path.join(out_dir, "ann_index_centroids.json"), "w"
-                    ) as f:
-                        json.dump(centroids, f)
-                    return sim_ops.ivf_assign(emb, centroids)
-
-                ann_part = "_cent"
-
-            # the partition column ("_sig" sign buckets / "_cent" inverted
-            # lists) gives the stage parquet the exact partition-pruned
-            # layout build_ann_index / ivf_build write: probe-set filters
-            # touch only the probed buckets' directories. "kind" in the
-            # config makes switching layouts a fingerprint change, so a
-            # resume never serves one layout as the other.
-            f_ann = ex.submit(
-                pipe.stage, "ann_index", build_ann,
-                upstream=["source"], config=ann_cfg, partition_by=[ann_part],
-            )
-        glof = f_glof.result()
-        postings = f_postings.result()
-        pair_stats = f_pair.result()
-        chem_disease = f_chem.result()
-        cgd_paths = f_cgd.result()
-        meta = f_meta.result()
-        near_dup = f_dedup.result() if f_dedup is not None else None
-        ann_index = f_ann.result() if f_ann is not None else None
-        doc_quality = f_quality.result() if f_quality is not None else None
-    out = {
-        "source": source,
-        "sentences": sentences,
-        "mentions": mention_df,
-        "annotations": annotations,
-        "canonical_map": canon,
-        "triples": triples,
-        "entity_postings": postings,
-        "pair_stats": pair_stats,
-        "chem_disease": chem_disease,
-        "cgd_paths": cgd_paths,
-        "glof": glof,
-        "meta": meta,
-        "_pipeline": pipe,  # type: ignore[dict-item]
-    }
-    if near_dup is not None:
-        out["near_dup_pairs"] = near_dup
-    if ann_index is not None:
-        out["ann_index"] = ann_index
-    if doc_quality is not None:
-        out["doc_quality"] = doc_quality
+    stages = kg_stages(spark, n_docs, source_df, seed, with_dedup, with_ann_index, with_quality)
+    frames = pipe.run(stages)
+    out: dict[str, DataFrame] = {s.name: frames[s.name] for s in stages}
+    out["_pipeline"] = pipe  # type: ignore[assignment]
     return out

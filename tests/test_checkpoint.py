@@ -3,9 +3,13 @@ identical outputs; per-partition lineage + metrics recorded."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import re
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from pubmedkb_web_spark.pipeline import runner
@@ -99,22 +103,145 @@ def test_kg_gate_counts_pinned_vs_oracle_vs_engine(spark, tmp_path):
     assert got == pinned
 
 
-def test_stage_session_confs_apply_and_restore(spark, tmp_path):
-    """Per-stage session confs must be visible during the stage's build
-    and restored (or unset) afterwards — the mechanism behind the
-    mentions-stage partition sizing."""
+WIDTH_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+
+
+@pytest.fixture(scope="module")
+def traced_build(spark, tmp_path_factory):
+    """One fresh 40-doc build whose every stage build records the session's
+    width confs, while a sampler thread reads them throughout the run."""
+    confs = lambda: tuple(spark.conf.get(k) for k in WIDTH_CONFS)  # noqa: E731
+    before, seen, done = confs(), [], threading.Event()
+
+    def sample():
+        while not done.wait(0.05):
+            seen.append(confs())
+
+    def recording(stage):
+        def build(pipe):
+            seen.append(confs())
+            return stage.build(pipe)
+
+        return dataclasses.replace(stage, build=build)
+
+    pipe = runner.CheckpointedPipeline(spark, str(tmp_path_factory.mktemp("traced")), resume=False)
+    stages = runner.kg_stages(spark, n_docs=40)
+    sampler = threading.Thread(target=sample, daemon=True)
+    sampler.start()
+    try:
+        pipe.run([recording(s) for s in stages])
+    finally:
+        done.set()
+        sampler.join()
+    return {"pipe": pipe, "stages": stages, "before": before, "seen": seen, "after": confs()}
+
+
+def test_no_stage_starts_before_its_upstreams_commit(traced_build):
+    pipe, stages = traced_build["pipe"], traced_build["stages"]
+    res = pipe.results
+    assert set(res) == {s.name for s in stages}
+    committed = {n: r.started + r.seconds for n, r in res.items()}
+    for s in stages:
+        for u in s.upstream:
+            assert res[s.name].started >= committed[u] - 1e-6, (s.name, u)
+    # by construction: meta is submitted when source commits, mentions only
+    # after sentences (submitted alongside meta) has committed; the
+    # dictionary-only canonical_map is submitted at t=0 with source, and
+    # entity_postings alongside triples
+    assert res["meta"].started < res["mentions"].started
+    assert res["canonical_map"].started < committed["sentences"]
+    assert res["entity_postings"].started < committed["triples"]
+    with open(os.path.join(pipe.out_dir, "mentions", runner.MARKER)) as f:
+        meta = json.load(f)
+    assert meta["upstream"] == ["sentences"]
+    assert meta["started"] == res["mentions"].started
+    assert meta["seconds"] == res["mentions"].seconds > 0
+
+
+def test_mentions_width_is_planned_not_a_session_conf(spark, traced_build):
+    """The mentions stage sizes its shuffle with one explicit repartition
+    of the sentences on (doc_id, sent_idx); no stage touches the session's
+    shuffle width or AQE advisory size, before, during or after a build."""
+    before = traced_build["before"]
+    assert traced_build["seen"] and set(traced_build["seen"]) == {before}
+    assert traced_build["after"] == before
+
+    pipe = traced_build["pipe"]
+    spec = next(s for s in traced_build["stages"] if s.name == "mentions")
+    plan = spec.build(pipe)._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange hashpartitioning\(doc_id#\d+, sent_idx#\d+, (\d+)\), (\w+)", plan)
+    width = max(spark.sparkContext.defaultParallelism, pipe.results["sentences"].row_count // 50_000)
+    assert exchanges == [(str(width), "REPARTITION_BY_NUM")], plan
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id", plan)) == 1, plan
+
+
+def test_failing_stage_fails_run_without_hanging(spark, tmp_path):
+    """A stage whose build raises fails the run: nothing waiting on it (or
+    submitted later) starts, the stage already running finishes and
+    commits, and the error is the build's own."""
+    raised = threading.Event()
+
+    def boom(pipe):
+        raised.set()
+        raise RuntimeError("boom")
+
+    def slow(pipe):
+        raised.wait(60)
+        return spark.range(3)
+
+    stages = [
+        runner.Stage("slow", slow),
+        runner.Stage("boom", boom),
+        runner.Stage("after_boom", lambda p: spark.range(1), ("boom",)),
+        runner.Stage("after_slow", lambda p: spark.range(1), ("slow",)),
+    ]
     pipe = runner.CheckpointedPipeline(spark, str(tmp_path), resume=False)
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key, None)
-    seen = {}
+    box = {}
 
-    def build():
-        seen["during"] = spark.conf.get(key)
-        return spark.range(10).toDF("id")
+    def run():
+        try:
+            pipe.run(stages)
+        except Exception as e:  # noqa: BLE001 — the test inspects it
+            box["error"] = e
 
-    pipe.stage("probe", build, session_confs={key: "4m"})
-    assert seen["during"] in ("4m", "4194304b", "4194304")
-    assert spark.conf.get(key, None) == before
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "pipeline hung after a stage failed"
+    assert isinstance(box.get("error"), RuntimeError) and str(box["error"]) == "boom"
+    assert set(pipe.results) == {"slow"}
+    assert os.path.exists(os.path.join(str(tmp_path), "slow", runner.MARKER))
+
+
+def test_truncated_marker_recomputes_stage_and_downstream(spark, tmp_path):
+    """A marker cut short mid-write is stale, not a crash: resume recomputes
+    that stage and everything downstream of it, and reuses the rest."""
+    out = str(tmp_path / "kb")
+    first = _collect_triples(runner.run_kg_pipeline(spark, out, n_docs=40))
+    marker = os.path.join(out, "annotations", runner.MARKER)
+    with open(marker, "rb") as f:
+        body = f.read()
+    with open(marker, "wb") as f:
+        f.write(body[: len(body) // 2])
+    t2 = runner.run_kg_pipeline(spark, out, n_docs=40)
+    recomputed = {n for n, r in t2["_pipeline"].results.items() if r.recomputed}
+    assert recomputed == {
+        "annotations", "triples", "entity_postings", "pair_stats", "chem_disease", "cgd_paths",
+    }
+    assert _collect_triples(t2) == first
+
+
+def test_file_uri_root_round_trip(spark, tmp_path):
+    """A ``file://`` checkpoint root builds and resumes with every stage
+    reused; it is the same checkpoint as the plain path."""
+    out = str(tmp_path / "kb")
+    t1 = runner.run_kg_pipeline(spark, "file://" + out, n_docs=40)
+    assert all(r.recomputed for r in t1["_pipeline"].results.values())
+    first = _collect_triples(t1)
+    for root in ("file://" + out, out):
+        t2 = runner.run_kg_pipeline(spark, root, n_docs=40)
+        assert not [n for n, r in t2["_pipeline"].results.items() if r.recomputed], root
+        assert _collect_triples(t2) == first
 
 
 def test_optional_dedup_and_ann_stages_resume(spark, tmp_path):
